@@ -357,6 +357,7 @@ def _ann_vector_leg(
         ivf_topk,
         lsh_topk,
         norm,
+        quantize_vec,
     )
 
     # same zero-norm guard as the exact leg, applied to BOTH sides: a
@@ -364,6 +365,13 @@ def _ann_vector_leg(
     # row must not reach the cosine (x/0.0 is an ANSI DIVIDE_BY_ZERO, and
     # LSH/IVF would otherwise bucket it into candidacy)
     corpus = embeddings.where(norm(_as_double(F.col("embedding"))) > 0)
+    if leg == "ivf":
+        # the IVF leg scores fixed-point vectors: a row whose components all
+        # round to 0 (e.g. every |x| < 5e-7) has integer norm 0 even though
+        # its float norm is not
+        corpus = corpus.where(
+            F.exists(quantize_vec(F.col("embedding")), lambda x: x != 0)
+        )
     seed_vecs = (
         corpus.join(
             seeds.select(F.col("seed_id").alias("vec_id")).distinct(), "vec_id"

@@ -245,9 +245,9 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k over the FIXED-POINT coarse quantizer
     (``ivf_topk_quantized``): integer Lloyd steps with one declared rounding
     make the whole quantizer+probe+score path engine-reproducible, so the
-    oracle below replays it end to end (VERDICT r2 item 5).  The float
-    ``ivf_topk`` remains the scale-default API (exercised by ``ann_recall``
-    and pytest); the two share every plan shape."""
+    oracle below replays it end to end (VERDICT r2 item 5).  ``ivf_topk``
+    runs the same quantizer and body with xxhash64 seeds and serves
+    ``hybrid_rrf(leg="ivf")``; no registry query calls it."""
     emb = _tbl(spark, sf_dir, "embeddings")
     # dim from the parquet schema probe once here feeds both the Lloyd loop
     # and the PQ path's convention (skips the per-call probe jobs)

@@ -326,7 +326,9 @@ def test_hybrid_ann_legs_survive_zero_norm_corpus_rows(spark):
     """A zero-norm corpus embedding (empty doc, hostile row) must not reach
     the cosine in the ANN legs — under ANSI that is x/0.0 DIVIDE_BY_ZERO and
     the whole job dies.  The exact leg already filters both sides; the ANN
-    legs must too (review finding)."""
+    legs must too (review finding).  The IVF leg scores fixed-point vectors,
+    so an all-1e-7 row (nonzero float norm, every component quantizing to 0)
+    must not reach its cosine either."""
     from pyspark.sql import functions as F
 
     from open_parse_spark.operators.search import hybrid_rrf
@@ -335,15 +337,22 @@ def test_hybrid_ann_legs_survive_zero_norm_corpus_rows(spark):
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     dim = len(emb.select("embedding").first()[0])
-    zero_row = spark.createDataFrame([(999999,)], "vec_id long").select(
-        "vec_id",
-        F.array(*[F.lit(0.0).cast("float") for _ in range(dim)]).alias(
-            "embedding"
-        ),
-        F.lit(0).cast("int").alias("label"),
+
+    def const_row(vec_id, x):
+        return spark.createDataFrame([(vec_id,)], "vec_id long").select(
+            "vec_id",
+            F.array(*[F.lit(x).cast("float") for _ in range(dim)]).alias(
+                "embedding"
+            ),
+            F.lit(0).cast("int").alias("label"),
+        )
+
+    poisoned = emb.unionByName(const_row(999999, 0.0)).unionByName(
+        const_row(999998, 1e-7)
     )
-    poisoned = emb.unionByName(zero_row)
     for leg in ("lsh", "ivf", "pq"):
         out = hybrid_rrf(docs, poisoned, leg=leg).collect()
         assert out, leg
         assert all(r["doc_id"] != 999999 for r in out), leg
+        if leg == "ivf":
+            assert all(r["doc_id"] != 999998 for r in out), leg

@@ -33,7 +33,12 @@ def main() -> int:
     from open_parse_spark.plans.queries import REGISTRY
     from open_parse_spark.spark.session import get_spark
 
-    spark = get_spark(app_name="oracle-check", master="local[8]", shuffle_partitions=16)
+    # cores as the benchmark sizes them: $SPARK_GRAFT_CPUS, else every CPU
+    # this process may run on
+    cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark(
+        app_name="oracle-check", master=f"local[{cores}]", shuffle_partitions=2 * cores
+    )
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

@@ -4,7 +4,10 @@ from open_parse_spark.spark.session import get_spark
 
 name = sys.argv[1]
 sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-spark = get_spark(app_name="prof", master="local[32]", shuffle_partitions=64)
+# cores as the benchmark sizes them: $SPARK_GRAFT_CPUS, else every CPU this
+# process may run on
+cores = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+spark = get_spark(app_name="prof", master=f"local[{cores}]", shuffle_partitions=2 * cores)
 from open_parse_spark.plans.queries import REGISTRY
 fn, _ = REGISTRY[name]
 # warm
